@@ -32,9 +32,6 @@ import graft.util.Sentinel
   */
 object Bench {
 
-  /** Retained for compatibility with older scripts/specs. */
-  def sentinelSpin(): Double = new Sentinel().spin()
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -75,9 +72,6 @@ object Bench {
     // in-memory rank-vector kernel (same iteration count; differential-
     // tested against the relational result at 1e-9 in KernelSpec)
     results("pagerank_arr") = time { PageRankArray.run(edges, verts, prIters).count() }
-    results("pagerank_blocked") = time {
-      PageRankBlocked.run(edges, verts, blockSize = 4096, iters = prIters).count()
-    }
     results("cc_fastsv") = time { ConnectedComponents.run(edges, verts).count() }
     results("labelprop") = time { LabelPropagation.run(edges, verts).count() }
     results("tricnt") = time { Triangles.count(edges).collect() }

@@ -127,28 +127,6 @@ object ConnectedComponents {
     val bcast = nVerts < broadcastMax
     val eP = (if (bcast) e else e.repartition(col("src"))).persist()
     val nnz = eP.count()
-    val resumed = store.flatMap(_.latest())
-    val f0 = resumed match {
-      case Some(s) => cp(store.get.load(edges.sparkSession, s))
-      case None =>
-        val init = cp(connected.select(col("v"), col("v").as("label")))
-        store.foreach(_.commit(init, 0, nnz, 0L))
-        init
-    }
-    // The loop state fuses the label vector with the maintained
-    // neighbor-min: (v, label, mngp) where mngp(v) = min over neighbors u
-    // of label(u). Built with ONE full SpMV here; every round after merges
-    // only the changed vertices' new labels in (labels are monotone
-    // non-increasing, so the min can never need un-doing). Every connected
-    // vertex has an in-neighbor (edges are symmetric), so the coalesce
-    // never actually fires — it is belt-and-braces for degenerate inputs.
-    val mngp0 = SpMV(eP, f0.select(col("v"), col("label").as("xv")),
-        Select2ndMin, broadcastX = bcast)
-      .select(col("v"), col("yv").as("mngp"))
-    var state = cp(f0.join(mngp0, Seq("v"), "left")
-      .select(col("v"), col("label"),
-        coalesce(col("mngp"), col("label")).as("mngp")))
-    cp.free(f0)
     // Sum as DECIMAL(38) so 10^12 × 10^12-scale ids can't overflow.
     def scan(df: DataFrame): (java.math.BigDecimal, Long) = {
       val r = df.agg(sum(col("label").cast("decimal(38,0)")),
@@ -165,81 +143,109 @@ object ConnectedComponents {
         count(when(col("label") =!= col("oldLabel"), 1))).first()
       (r.getDecimal(0), r.getLong(1), r.getLong(2))
     }
-    // On resume the convergence state comes from the same one-scan
-    // aggregate over the loaded vector (an extra fixpoint round is a no-op
-    // by label monotonicity, so a run resumed at convergence still ends
-    // with identical labels).
-    var (prevSum, labelCount) = resumed match {
-      case Some(_) => scan(state)
-      case None => (scan(state)._1, nVerts) // live labels never grow
-    }
-    var changed = true
-    var it = resumed.map(_.iteration).getOrElse(0)
-    val limit = stopAfter.map(s => math.min(s, maxIters)).getOrElse(maxIters)
-    while (changed && it < limit) {
-      it += 1
-      def small(df: DataFrame): DataFrame =
-        if (labelCount < SmallMax) broadcast(df) else df
-      // 1. hook + spread: candidate per tree, folded back to all members
-      //    (mngp comes from the maintained state, no per-round SpMV)
-      val hooks = state.groupBy(col("label")).agg(min(col("mngp")).as("cand"))
-      val hooked = state.join(small(hooks), Seq("label"), "left")
-        .select(col("v"), col("label").as("oldLabel"), col("mngp"),
-          least(col("label"), col("mngp"),
-            coalesce(col("cand"), col("label"))).as("hlabel"))
-      // 2. shortcut against the label-restricted map (small after round 1).
-      // Post-hook label values are least(label, mngp, cand) — every one a
-      // PRE-hook label of some vertex — so the map's domain is exactly
-      // hooks' key set, already computed: no extra n-row distinct needed.
-      val labelMap = hooked.join(small(hooks.select(col("label").as("v"))),
-          Seq("v"), "left_semi")
-        .select(col("v").as("pv"), col("hlabel").as("glabel"))
-      // (A second pointer-jump per round was tried and measured SLOWER at
-      // scale-22 — the extra materialization outweighs the saved rounds.)
-      val next = cp(hooked.join(small(labelMap), col("hlabel") === col("pv"), "left")
-        .select(col("v"), col("oldLabel"), col("mngp"),
-          coalesce(col("glabel"), col("hlabel")).as("label")))
-      val (s, lc, nChanged) = scan3(next)
-      // 2 flops per stored edge per round: the Select2ndMin compare folded
-      // into the maintained mngp merge plus the hook/shortcut min fold.
-      store.foreach(_.commit(next.select(col("v"), col("label")), it, nnz, 2L * nnz))
-      changed = s.compareTo(prevSum) != 0
-      prevSum = s
-      labelCount = lc
-      cp.free(state)
-      if (changed) {
-        // 3. change-vector mngp maintenance: only edges OUT of vertices
-        // whose label just dropped can lower a neighbor's mngp. The join
-        // streams the cached edge table once (sequential probe against the
-        // changed build side — never a re-shuffle of the edges) and the
-        // aggregate sees only O(Σ deg(changed)) rows. deltas is
-        // checkpointed so its ROW COUNT (≤ Σ deg(changed) distinct dsts —
-        // nChanged alone does not bound it through hubs) can pick
-        // broadcast vs shuffle for the state merge for free.
-        val chg = next.filter(col("label") =!= col("oldLabel"))
-          .select(col("v").as("cv"), col("label").as("clabel"))
-        val chgJ = if (bcast || nChanged < SmallMax) broadcast(chg)
-                   else chg.hint("shuffle_hash")
-        val deltas = cp(eP.join(chgJ, eP("src") === col("cv"))
-          .groupBy(eP("dst").as("v")).agg(min(col("clabel")).as("d")))
-        val dJ = if (bcast || deltas.count() < SmallMax) broadcast(deltas)
-                 else deltas.hint("shuffle_hash")
-        state = cp(next.join(dJ, Seq("v"), "left")
-          .select(col("v"), col("label"),
-            least(col("mngp"), coalesce(col("d"), col("mngp"))).as("mngp")))
-        cp.free(deltas)
-        cp.free(next)
-      } else {
-        state = next
+    // The iterate is the round's (v, oldLabel, mngp, label) frame; the
+    // driver commits its (v, label) projection. 2 flops per stored edge per
+    // round: the Select2ndMin compare folded into the maintained mngp merge
+    // plus the hook/shortcut min fold.
+    val labels = Fixpoint.run(cp, connected.select(col("v"), col("v").as("label")),
+        nnz, maxIters, store, stopAfter, keep = Seq(connected)) { (f0, from) =>
+      new Fixpoint.Step {
+        // On resume the convergence state comes from the same one-scan
+        // aggregate over the loaded vector (an extra fixpoint round is a
+        // no-op by label monotonicity, so a run resumed at convergence
+        // still ends with identical labels).
+        var (prevSum, labelCount) =
+          if (from == 0) (scan(f0)._1, nVerts) // live labels never grow
+          else scan(f0)
+        var nChanged = 0L
+        // The loop state fuses the label vector with the maintained
+        // neighbor-min: (v, label, mngp) where mngp(v) = min over
+        // neighbors u of label(u).
+        var state: DataFrame = null
+
+        def small(df: DataFrame): DataFrame =
+          if (labelCount < SmallMax) broadcast(df) else df
+
+        /** (v, label, mngp) for the iterate `x` a round starts from. */
+        private def mngpState(x: DataFrame): DataFrame =
+          if (x eq f0) {
+            // ONE full SpMV for the starting vector. Every connected vertex
+            // has an in-neighbor (edges are symmetric), so the coalesce
+            // never actually fires — it is belt-and-braces for degenerate
+            // inputs.
+            val mngp0 = SpMV(eP, f0.select(col("v"), col("label").as("xv")),
+                Select2ndMin, broadcastX = bcast)
+              .select(col("v"), col("yv").as("mngp"))
+            cp(f0.join(mngp0, Seq("v"), "left")
+              .select(col("v"), col("label"),
+                coalesce(col("mngp"), col("label")).as("mngp")))
+          } else {
+            // Change-vector mngp maintenance: only edges OUT of vertices
+            // whose label just dropped can lower a neighbor's mngp (labels
+            // are monotone non-increasing, so the min never needs
+            // un-doing). The join streams the cached edge table once
+            // (sequential probe against the changed build side — never a
+            // re-shuffle of the edges) and the aggregate sees only
+            // O(Σ deg(changed)) rows. deltas is checkpointed so its ROW
+            // COUNT (≤ Σ deg(changed) distinct dsts — nChanged alone does
+            // not bound it through hubs) can pick broadcast vs shuffle for
+            // the state merge for free.
+            val chg = x.filter(col("label") =!= col("oldLabel"))
+              .select(col("v").as("cv"), col("label").as("clabel"))
+            val chgJ = if (bcast || nChanged < SmallMax) broadcast(chg)
+                       else chg.hint("shuffle_hash")
+            val deltas = cp(eP.join(chgJ, eP("src") === col("cv"))
+              .groupBy(eP("dst").as("v")).agg(min(col("clabel")).as("d")))
+            val dJ = if (bcast || deltas.count() < SmallMax) broadcast(deltas)
+                     else deltas.hint("shuffle_hash")
+            val merged = cp(x.join(dJ, Seq("v"), "left")
+              .select(col("v"), col("label"),
+                least(col("mngp"), coalesce(col("d"), col("mngp"))).as("mngp")))
+            cp.free(deltas)
+            merged
+          }
+
+        def apply(x: DataFrame): DataFrame = {
+          state = mngpState(x)
+          // the round reads only `state` from here on: free `x` now, not
+          // after the next iterate is built (the driver's free is then a
+          // no-op), so `x` is not live beside `state` and the next iterate
+          cp.free(x)
+          // 1. hook + spread: candidate per tree, folded back to all members
+          val hooks = state.groupBy(col("label")).agg(min(col("mngp")).as("cand"))
+          val hooked = state.join(small(hooks), Seq("label"), "left")
+            .select(col("v"), col("label").as("oldLabel"), col("mngp"),
+              least(col("label"), col("mngp"),
+                coalesce(col("cand"), col("label"))).as("hlabel"))
+          // 2. shortcut against the label-restricted map (small after
+          // round 1). Post-hook label values are least(label, mngp, cand)
+          // — every one a PRE-hook label of some vertex — so the map's
+          // domain is exactly hooks' key set, already computed: no extra
+          // n-row distinct needed.
+          val labelMap = hooked.join(small(hooks.select(col("label").as("v"))),
+              Seq("v"), "left_semi")
+            .select(col("v").as("pv"), col("hlabel").as("glabel"))
+          // (A second pointer-jump per round was tried and measured SLOWER
+          // at scale-22 — the extra materialization outweighs the saved
+          // rounds.)
+          hooked.join(small(labelMap), col("hlabel") === col("pv"), "left")
+            .select(col("v"), col("oldLabel"), col("mngp"),
+              coalesce(col("glabel"), col("hlabel")).as("label"))
+        }
+
+        override def changed(next: DataFrame): Boolean = {
+          val (s, lc, nc) = scan3(next)
+          cp.free(state)
+          val moved = s.compareTo(prevSum) != 0
+          prevSum = s; labelCount = lc; nChanged = nc
+          moved
+        }
       }
     }
     eP.unpersist(false)
-    // `isolated` is an anti-join against `connected`, so the final result
-    // still reads the connected frame — keep it and the final state; free
-    // the superseded per-round frames (already freed in-loop; this catches
-    // the initial state when the loop ran zero rounds).
-    cp.freeAllExcept(state, connected)
-    state.select(col("v"), col("label"))
+    // `isolated` is an anti-join against `connected`, so the result still
+    // reads the connected frame, which the driver keeps.
+    labels.select(col("v"), col("label"))
       .unionByName(isolated.select(col("v"), col("v").as("label")))
       .select(col("v").as("vid"), col("label").as("component"))
   }

@@ -50,7 +50,6 @@ object LabelPropagation {
   private def lp(edges: DataFrame, vertices: DataFrame, rounds: Int,
                  store: Option[graft.checkpoint.SnapshotStore],
                  stopAfter: Option[Int]): DataFrame = {
-    val cp = new graft.util.Checkpoints(edges.sparkSession)
     val bcast = vertices.count() < BroadcastMax
     // Int-pack the persisted edge cache when ids fit 2^31: the per-round
     // join + double aggregate streams this table, and it is DRAM-bound at
@@ -69,17 +68,11 @@ object LabelPropagation {
       col("dst").cast(idType).as("dst"))
     val e = (if (bcast) ePacked else ePacked.repartition(col("src"))).persist()
     val nnz = e.count()
-    val resumed = store.flatMap(_.latest())
-    var labels = resumed match {
-      case Some(s) => cp(store.get.load(edges.sparkSession, s))
-      case None =>
-        val init = cp(vertices.select(col("v"), col("v").as("label")))
-        store.foreach(_.commit(init, 0, nnz, 0L))
-        init
-    }
-    val from = resumed.map(_.iteration).getOrElse(0)
-    val limit = stopAfter.map(s => math.min(s, rounds)).getOrElse(rounds)
-    for (round <- from + 1 to limit) {
+    // 2 flops per stored edge per round: the count accumulate plus the
+    // argmax struct-max compare.
+    val labels = Fixpoint.run(new graft.util.Checkpoints(edges.sparkSession),
+        vertices.select(col("v"), col("v").as("label")), nnz, rounds, store,
+        stopAfter) { (_, _) => labels =>
       val lbl = labels.select(col("v").cast(idType).as("src"),
         col("label").cast(idType).as("label"))
       val counts = e.join(if (bcast) broadcast(lbl) else lbl.hint("shuffle_hash"), Seq("src"))
@@ -91,16 +84,10 @@ object LabelPropagation {
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("v").cast("long").as("v"),
           (-col("m.nl")).cast("long").as("newLabel"))
-      val prev = labels
-      labels = cp(labels.join(best, Seq("v"), "left")
-        .select(col("v"), coalesce(col("newLabel"), col("label")).as("label")))
-      // 2 flops per stored edge per round: the count accumulate plus the
-      // argmax struct-max compare.
-      store.foreach(_.commit(labels, round, nnz, 2L * nnz))
-      cp.free(prev)
+      labels.join(best, Seq("v"), "left")
+        .select(col("v"), coalesce(col("newLabel"), col("label")).as("label"))
     }
     e.unpersist(false)
-    cp.freeAllExcept(labels)
     labels.select(col("v").as("vid"), col("label"))
   }
 }

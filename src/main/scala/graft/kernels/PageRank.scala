@@ -3,6 +3,7 @@ package graft.kernels
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.checkpoint.SnapshotStore
+import graft.util.Checkpoints
 
 /** PageRank over the (+, *) semiring — the flagship SpMV iteration.
   *
@@ -27,11 +28,13 @@ import graft.checkpoint.SnapshotStore
   *  - dangling mass: one semi-join aggregate on the cached vector, folded
   *    back lazily via a broadcast 1-row cross join — no driver action in
   *    the loop;
-  *  - `localCheckpoint` truncates lineage every iteration so planning cost
-  *    stays O(1) in iteration count;
-  *  - [[resumable]] commits every iteration to a [[SnapshotStore]]
-  *    (Iceberg-style manifest, per-partition lineage, nnz/flop metrics) and
-  *    restarts from the latest snapshot.
+  *  - the loop is [[Fixpoint]]'s, shared with label propagation and
+  *    FastSV: it truncates lineage every iteration so planning cost stays
+  *    O(1) in iteration count, and for [[resumable]] commits every
+  *    iteration to a [[SnapshotStore]] (Iceberg-style manifest,
+  *    per-partition lineage, nnz/flop metrics) and restarts from the latest
+  *    snapshot. `run`, `runExact`, `profile` and `resumable` all go
+  *    through the one private `iterate`.
   */
 object PageRank {
 
@@ -130,9 +133,7 @@ object PageRank {
         val spark = pr.sparkSession
         import spark.implicits._
         broadcast(Seq(sv).toDF("sinkSum"))
-      case None =>
-        broadcast(pr.join(ctx.dangling, Seq("v"), "left_semi")
-          .agg(coalesce(sum(col("r")), lit(0.0)).as("sinkSum")))
+      case None => broadcast(sinkSum(ctx, pr))
     }
     def formula(s: org.apache.spark.sql.Column) =
       lit((1 - d) / ctx.n) + lit(d) * (s + col("sinkSum") / ctx.n)
@@ -141,57 +142,57 @@ object PageRank {
         .select(col("v"), formula(lit(0.0)).as("r")))
   }
 
-  /** Driver-side sink recurrence for isolated sinks: every isolated vertex
-    * holds rank r_iso; sink' = k · ((1−d)/n + d·sink/n). */
-  private def nextSink(ctx: Ctx, sink: Double, d: Double): Double =
-    ctx.isolatedSinks.map(k => k * ((1 - d) / ctx.n + d * sink / ctx.n)).getOrElse(0.0)
-
-  private def initSink(ctx: Ctx): Option[Double] =
-    ctx.isolatedSinks.map(k => k * (1.0 / ctx.n))
+  /** The dangling mass of `pr`: one semi-join aggregate, 1 row. */
+  private def sinkSum(ctx: Ctx, pr: DataFrame): DataFrame =
+    pr.join(ctx.dangling, Seq("v"), "left_semi")
+      .agg(coalesce(sum(col("r")), lit(0.0)).as("sinkSum"))
 
   private def release(ctx: Ctx): Unit = {
     ctx.edgesNorm.unpersist(false); ctx.dangling.unpersist(false)
     ctx.noInbound.unpersist(false); ctx.verts.unpersist(false)
   }
 
+  /** The one PageRank loop, on [[Fixpoint]]. For isolated sinks the sink
+    * mass follows the driver-side recurrence sink' = k · ((1−d)/n +
+    * d·sink/n) (every isolated vertex holds the same rank); a run resumed
+    * past iteration 0 recovers it with one aggregate. */
+  private def iterate(ctx: Ctx, iters: Int, d: Double,
+                      store: Option[SnapshotStore],
+                      stopAfter: Option[Int]): DataFrame =
+    Fixpoint.run(new Checkpoints(ctx.verts.sparkSession),
+        ctx.verts.select(col("v"), lit(1.0 / ctx.n).as("r")), ctx.nnz, iters,
+        store, stopAfter) { (pr0, from) =>
+      var sink = ctx.isolatedSinks.map { k =>
+        if (from == 0) k * (1.0 / ctx.n)
+        else sinkSum(ctx, pr0).first().getDouble(0)
+      }
+      pr => {
+        val next = step(ctx, pr, d, sink)
+        sink = for (k <- ctx.isolatedSinks; s <- sink)
+          yield k * ((1 - d) / ctx.n + d * s / ctx.n)
+        next
+      }
+    }
+
   /** Phase-timed run for benchmarking: (prepareSec, perIterSec). */
   def profile(edges: DataFrame, vertices: DataFrame, iters: Int,
               d: Double = 0.85,
               broadcastMax: Long = BroadcastMax): (Double, Double) = {
     val t0 = System.nanoTime()
-    val cp = new graft.util.Checkpoints(edges.sparkSession)
     val ctx = prepare(edges, vertices, broadcastMax)
-    var pr = cp(ctx.verts.select(col("v"), lit(1.0 / ctx.n).as("r")))
-    var sink = initSink(ctx)
     val t1 = System.nanoTime()
-    for (_ <- 1 to iters) {
-      val prev = pr
-      pr = cp(step(ctx, pr, d, sink))
-      sink = sink.map(s => nextSink(ctx, s, d))
-      cp.free(prev)
-    }
-    pr.count()
+    iterate(ctx, iters, d, None, None)
     val t2 = System.nanoTime()
     release(ctx)
-    cp.freeAllExcept(pr)
     ((t1 - t0) / 1e9, (t2 - t1) / 1e9 / iters)
   }
 
   /** Unrounded ranks (v: long, r: double). */
   def runExact(edges: DataFrame, vertices: DataFrame, iters: Int,
                d: Double, broadcastMax: Long = BroadcastMax): DataFrame = {
-    val cp = new graft.util.Checkpoints(edges.sparkSession)
     val ctx = prepare(edges, vertices, broadcastMax)
-    var pr = cp(ctx.verts.select(col("v"), lit(1.0 / ctx.n).as("r")))
-    var sink = initSink(ctx)
-    for (_ <- 1 to iters) {
-      val prev = pr
-      pr = cp(step(ctx, pr, d, sink))
-      sink = sink.map(s => nextSink(ctx, s, d))
-      cp.free(prev)
-    }
+    val pr = iterate(ctx, iters, d, None, None)
     release(ctx)
-    cp.freeAllExcept(pr)
     pr
   }
 
@@ -202,36 +203,9 @@ object PageRank {
   def resumable(edges: DataFrame, vertices: DataFrame, store: SnapshotStore,
                 iters: Int = 10, d: Double = 0.85,
                 stopAfter: Option[Int] = None): DataFrame = {
-    val spark = edges.sparkSession
-    val cp = new graft.util.Checkpoints(spark)
     val ctx = prepare(edges, vertices)
-    val resumed = store.latest()
-    var iter = resumed.map(_.iteration).getOrElse(0)
-    var pr = resumed match {
-      case Some(s) => cp(store.load(spark, s))
-      case None =>
-        val init = cp(ctx.verts.select(col("v"), lit(1.0 / ctx.n).as("r")))
-        store.commit(init, 0, ctx.nnz, 0L)
-        init
-    }
-    // On resume the sink mass is recovered with a one-time aggregate.
-    var sink: Option[Double] = ctx.isolatedSinks.map { _ =>
-      if (iter == 0) ctx.isolatedSinks.get * (1.0 / ctx.n)
-      else pr.join(ctx.dangling, Seq("v"), "left_semi")
-        .agg(coalesce(sum(col("r")), lit(0.0))).first().getDouble(0)
-    }
-    val limit = stopAfter.map(s => math.min(s, iters)).getOrElse(iters)
-    while (iter < limit) {
-      iter += 1
-      val prev = pr
-      pr = cp(step(ctx, pr, d, sink))
-      sink = sink.map(s => nextSink(ctx, s, d))
-      // 2 flops per stored edge per SpMV iteration (multiply + add).
-      store.commit(pr, iter, ctx.nnz, 2L * ctx.nnz)
-      cp.free(prev)
-    }
+    val pr = iterate(ctx, iters, d, Some(store), stopAfter)
     release(ctx)
-    cp.freeAllExcept(pr)
     pr
   }
 }

@@ -21,9 +21,8 @@ import org.apache.spark.storage.StorageLevel
   * pure scheduling at scale-22); large ones merge per rowBlock on
   * executors first (one keyed shuffle of dense segments) so the driver
   * collects only the merged |V| doubles. Either way the driver recovers
-  * the dangling mass as Σx − Σy (each non-dangling column sums to 1 —
-  * [[PageRankBlocked]]'s identity) and applies the teleport formula in a
-  * flat array pass. The relational path's 2 keyed per-edge exchanges
+  * the dangling mass as Σx − Σy (each non-dangling column sums to 1) and
+  * applies the teleport formula in a flat array pass. The relational path's 2 keyed per-edge exchanges
   * become at most one per-segment exchange plus a ≤128 MB collect.
   *
   * Determinism: per-row columns are sorted at build

@@ -75,7 +75,7 @@ object Checkpoints {
   }
 }
 
-final class Checkpoints(spark: SparkSession) {
+final class Checkpoints(val spark: SparkSession) {
   private val sc = spark.sparkContext
   private val owned = new java.util.IdentityHashMap[DataFrame, Array[Int]]()
 

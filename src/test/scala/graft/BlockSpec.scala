@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.linalg._
-import graft.kernels.{PageRank, PageRankBlocked}
 
 /** Differential tests: the 2D block-CSR path must equal the plain
   * DataFrame path (SURVEY.md §7 build order step 3). */
@@ -75,14 +74,5 @@ class BlockSpec extends AnyFunSuite {
     val one = coo(BlockMatrix.spgemm(blocks, blocks, 32, 0.0, _ + _, _ * _))
     val phased = coo(BlockMatrix.spgemmPhased(blocks, blocks, 32, nb, 3, 0.0, _ + _, _ * _))
     assert(one == phased)
-  }
-
-  test("blocked PageRank matches plain PageRank to 1e-12") {
-    val plain = PageRank.runExact(e, v, 10, 0.85).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val blocked = PageRankBlocked.run(e, v, blockSize = 32).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(plain.keySet == blocked.keySet)
-    for ((k, x) <- plain) assert(math.abs(x - blocked(k)) < 1e-12, s"$k: $x vs ${blocked(k)}")
   }
 }

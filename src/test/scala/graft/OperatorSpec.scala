@@ -3,11 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.graph.RMat
-import graft.linalg.{ArgMaxCountSemiring, TypedSpMV}
 import graft.operators.{EWise, MatrixOps, VectorOps}
 
-/** Coverage tests for the generalized ewise/indexing/vector operators and
-  * the typed-semiring extension point. */
+/** Coverage tests for the generalized ewise/indexing/vector operators. */
 class OperatorSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -75,21 +73,6 @@ class OperatorSpec extends AnyFunSuite {
   test("bandwidth stats") {
     val r = EWise.bandwidth(m((0, 5, 1.0), (2, 3, 1.0))).collect()(0)
     assert(r.getLong(0) == 5L && r.getLong(1) == 2L && r.getLong(2) == 2L)
-  }
-
-  test("typed argmax-count semiring SpMV reproduces LP round 1") {
-    val pairs = RefKernels.randomGraph(40, 120, seed = 9L)
-    val e = undirected(pairs)
-    val edgeSeq = (pairs ++ pairs.map(p => (p._2, p._1))).distinct
-    val vertSeq = edgeSeq.flatMap(p => Seq(p._1, p._2)).distinct
-    val x = vertSeq.map(v => (v, v.toDouble)).toDF("v", "xv")
-    val typed = TypedSpMV(e, x, ArgMaxCountSemiring)
-      .map { case (v, counts) => (v, ArgMaxCountSemiring.best(counts)) }
-      .collect().toMap
-    val ref = RefKernels.labelProp(edgeSeq, vertSeq, rounds = 1)
-    // vertices with neighbors must match the reference's round-1 label
-    for ((v, l) <- typed) assert(ref(v) == l, s"$v: $l vs ${ref(v)}")
-    assert(typed.nonEmpty)
   }
 
   test("galerkin triple product: association-invariant, equals coarse group-sum") {

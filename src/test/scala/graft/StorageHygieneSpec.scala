@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.checkpoint.SnapshotStore
 import graft.kernels._
 
 /** Deterministic storage hygiene for the iterative kernels.
@@ -68,6 +70,28 @@ class StorageHygieneSpec extends AnyFunSuite {
   test("label propagation retains only the label result frame") {
     assert(leakedBy(LabelPropagation.run(edges, verts)) <= 1)
   }
+
+  test("relational connected components retain result + connected-set frames only") {
+    assert(leakedBy(ConnectedComponents.run(edges, verts, arrayMax = 0L)) <= 2)
+  }
+
+  // The resumable kernels, crashed mid-run and then resumed from the
+  // snapshot: both calls leave only what `run` leaves.
+  private val resumables = Seq[(String, Int, (SnapshotStore, Option[Int]) => DataFrame)](
+    ("pagerank", 1, (s, stop) => PageRank.resumable(edges, verts, s, iters = 5, stopAfter = stop)),
+    ("connected components", 2,
+      (s, stop) => ConnectedComponents.resumable(edges, verts, s, stopAfter = stop)),
+    ("label propagation", 1,
+      (s, stop) => LabelPropagation.resumable(edges, verts, s, stopAfter = stop)))
+  for ((name, frames, run) <- resumables)
+    test(s"resumable $name retains only its result frames, crashed and resumed") {
+      val store = new SnapshotStore(
+        java.nio.file.Files.createTempDirectory("graft-hygiene").toString)
+      val crashed = leakedBy(run(store, Some(2)))
+      val resumed = leakedBy(run(store, None))
+      assert(crashed <= frames, s"crashed run leaked $crashed frames")
+      assert(resumed <= frames, s"resumed run leaked $resumed frames")
+    }
 
   test("bipartite matching retains only the matched result frame") {
     val s = spark
